@@ -298,9 +298,10 @@ def _ipkeys_ruleset():
 # correlate ONCE, not once per query.  The general path's internal stage
 # persists are released as soon as the final frame is materialized, so
 # each cache entry holds exactly one persisted frame (freed by
-# clear_entry_caches).
+# clear_entry_caches).  correlate_dual_ip's staged-fallback frame is
+# memoized the same way under its own tag.
 #
-# Cache keying: (applicationId, sf_dir) — applicationId is unique per
+# Cache keying: (applicationId, sf_dir, tag) — applicationId is unique per
 # SparkContext lifetime, so a NEW session after a stop can never collide
 # with a dead entry (id(spark) could: CPython reuses ids).  Values carry
 # the owning session so entries of stopped sessions are evicted on every
@@ -325,30 +326,42 @@ def _cache_key(spark: SparkSession, sf_dir: str) -> tuple:
     return (spark.sparkContext.applicationId, sf_dir)
 
 
-def _ip_correlated_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated frame for the IP-keyed corpus — parse_src_ip keys force
-    the staged GENERAL path in correlate.py (the reference's primary
-    deployment mode, after.c:108-110 hashes extracted addresses)."""
+def _memo_correlated(spark: SparkSession, sf_dir: str, tag: str,
+                     build: Callable[[list], DataFrame]) -> DataFrame:
+    """``build(persists)`` persisted, materialized and memoized in
+    _IP_CORR_CACHE under (session, sf_dir, tag); the stage frames the
+    build appends to ``persists`` are released as soon as the result has
+    materialized, so each entry holds exactly one persisted frame."""
+    from pyspark import StorageLevel
     _evict_stopped(_IP_CORR_CACHE)
-    key = _cache_key(spark, sf_dir)
+    key = (*_cache_key(spark, sf_dir), tag)
     cached = _IP_CORR_CACHE.get(key)
     if cached is not None:
         return cached[1]
-    from pyspark import StorageLevel
-    from sagan_spark.correlate import conv_keyed_only, run_correlate
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-    rs = _ipkeys_ruleset()
-    assert not conv_keyed_only(rs)   # must exercise the general path
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
     stage_persists: list = []
-    df = (run_correlate(run_match(parsed, rs), rs, persists=stage_persists)
-          .persist(StorageLevel.MEMORY_AND_DISK))
+    df = build(stage_persists).persist(StorageLevel.MEMORY_AND_DISK)
     df.count()   # materialize, then free the per-stage intermediates
     for frame in stage_persists:
         frame.unpersist()
     _IP_CORR_CACHE[key] = (spark, df)
     return df
+
+
+def _ip_correlated_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlated frame for the IP-keyed corpus — parse_src_ip keys force
+    the staged GENERAL path in correlate.py (the reference's primary
+    deployment mode, after.c:108-110 hashes extracted addresses)."""
+    from sagan_spark.correlate import conv_keyed_only, run_correlate
+    from sagan_spark.match import run_match
+    from sagan_spark.parse import parse_transcripts
+    rs = _ipkeys_ruleset()
+    assert not conv_keyed_only(rs)   # must exercise the general path
+
+    def build(persists: list) -> DataFrame:
+        parsed = parse_transcripts(_transcripts(spark, sf_dir))
+        return run_correlate(run_match(parsed, rs), rs, persists=persists)
+
+    return _memo_correlated(spark, sf_dir, "ipkeys", build)
 
 
 # query name → memoized-frame family.  The driver's gate runs every query
@@ -377,12 +390,6 @@ def clear_entry_caches() -> None:
         if _session_live(sess):
             df.unpersist()
     _IP_CORR_CACHE.clear()
-    for frame in _LOOSE_PERSISTS:
-        try:
-            frame.unpersist()
-        except Exception:   # frame's session already stopped
-            pass
-    _LOOSE_PERSISTS.clear()
 
 
 def _matches_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,11 +631,6 @@ def _q_correlate_flexbit_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("conv_id", "turn_idx", "flexbit_pass"))
 
 
-# staged-fallback stage persists from one-shot (un-memoized) queries —
-# registered here so clear_entry_caches releases them with everything else
-_LOOSE_PERSISTS: list = []
-
-
 def _dual_ruleset():
     from sagan_spark.rules.compiler import compile_ruleset
     return compile_ruleset(
@@ -652,11 +654,14 @@ def _q_correlate_dual_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sagan_spark.parse import parse_transcripts
     rs = _dual_ruleset()
     assert not single_key_per_row(rs)   # must exercise the staged path
-    parsed = parse_transcripts(_transcripts(spark, sf_dir))
-    corr = run_correlate(run_match(parsed, rs), rs,
-                         persists=_LOOSE_PERSISTS)
-    return corr.select("conv_id", "turn_idx", "epoch",
-                       "suppress_after", "suppress_thresh")
+
+    def build(persists: list) -> DataFrame:
+        parsed = parse_transcripts(_transcripts(spark, sf_dir))
+        corr = run_correlate(run_match(parsed, rs), rs, persists=persists)
+        return corr.select("conv_id", "turn_idx", "epoch",
+                           "suppress_after", "suppress_thresh")
+
+    return _memo_correlated(spark, sf_dir, "dual", build)
 
 
 def _q_normalize_liblognorm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2067,7 +2072,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     the first 50 entries only (CORRECTNESS_r03 proved it), so the newest
     / least-proven queries must sit inside that window.  The tail set
     ALTERNATES between rounds (the round-4 verdict's item 5) so the union
-    of any two consecutive gates covers all 57 registered queries: the
+    of any two consecutive gates covers all 58 registered queries: the
     round-4 tail (text_fingerprint … simhash64) is back inside this
     window, and 7 queries gated green in r04 (and every earlier round
     they were registered) rotate out.  The tail additionally has an

@@ -6,8 +6,11 @@ GroupState between them."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import time
+from contextlib import contextmanager
 
 import pandas as pd
 import pytest
@@ -18,7 +21,8 @@ from sagan_spark.datagen import gen_rows
 from sagan_spark.match import run_match
 from sagan_spark.parse import parse_transcripts, split_ignored
 from sagan_spark.rules.compiler import compile_ruleset_from_dir
-from sagan_spark.streaming import read_transcript_stream, streaming_alerts
+from sagan_spark.streaming import (read_transcript_stream,
+                                   run_stream_to_parquet, streaming_alerts)
 
 EMIT_COLS = ["conv_id", "turn_idx", "sid", "suppress_after",
              "suppress_thresh", "xbit_pass", "flexbit_pass"]
@@ -39,6 +43,35 @@ def _batch_result(spark, rows, ruleset) -> pd.DataFrame:
             .sort_values(EMIT_COLS).reset_index(drop=True))
 
 
+DUAL_RULE = (
+    'alert syslog any any -> any any (msg:"dual track"; '
+    'content:"connection from"; parse_src_ip: 1; '
+    "after: track by_src, count 1, seconds 604800; "
+    "threshold: type limit, track by_dst, count 1, seconds 604800; "
+    "classtype:misc-attack; sid:6500001; rev:1;)")
+
+
+def _ipkeys_dual_ruleset(tmp_path):
+    """rules-entry/ipkeys plus a dual-track rule: every general-path key
+    kind ("x", "f", "a" and the per-sid "d") in one ruleset."""
+    rdir = tmp_path / "ipkeys_dual_rules"
+    shutil.copytree(os.path.join(os.path.dirname(__file__), "..",
+                                 "rules-entry", "ipkeys"), rdir)
+    (rdir / "dual.rules").write_text(DUAL_RULE + "\n")
+    return compile_ruleset_from_dir(str(rdir))
+
+
+@contextmanager
+def _shuffle_partitions(spark, n):
+    """Run a query under ``n`` state buckets, then restore the conf."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 def _stream_result(spark, in_dir, ruleset, max_files) -> pd.DataFrame:
     stream = read_transcript_stream(spark, in_dir, max_files=max_files)
     # state_timeout_ms=0: explicit eviction opt-out so
@@ -57,6 +90,16 @@ def _stream_result(spark, in_dir, ruleset, max_files) -> pd.DataFrame:
             .sort_values(EMIT_COLS).reset_index(drop=True))
 
 
+def _append_file(spark, pdf, out_dir):
+    """Append ``pdf`` to the stream's input directory as one parquet file;
+    the pause gives each file a distinct mtime, so the file source reads
+    them in write order."""
+    (spark.createDataFrame(pdf)
+     .withColumn("turn_idx", F.col("turn_idx").cast("int"))
+     .coalesce(1).write.mode("append").parquet(out_dir))
+    time.sleep(1.1)
+
+
 def _write_chunks(spark, rows, out_dir, n_chunks):
     """Chunk by turn ranges so arrival order == epoch order per conv
     (mirrors tail-ing a live log), with distinct mtimes so the file
@@ -71,10 +114,7 @@ def _write_chunks(spark, rows, out_dir, n_chunks):
         chunk = pdf[(pdf["turn_idx"] >= lo) & (pdf["turn_idx"] < hi)]
         if not len(chunk):
             continue
-        (spark.createDataFrame(chunk)
-         .withColumn("turn_idx", F.col("turn_idx").cast("int"))
-         .coalesce(1).write.mode("append").parquet(out_dir))
-        time.sleep(1.1)  # distinct mtime ordering for the file source
+        _append_file(spark, chunk, out_dir)
 
 
 def test_stream_equals_batch_single_microbatch(spark, ruleset, tmp_path):
@@ -233,3 +273,200 @@ def test_stream_none_flexbit_equal_batch(spark, tmp_path):
     # both pass outcomes must occur or the ruleset isn't exercising state
     assert set(batch["flexbit_pass"].unique()) == {True, False}
     pd.testing.assert_frame_equal(batch, stream)
+
+
+def test_stream_pruner_keeps_count0_entries(spark, tmp_path):
+    """A `count 0` after entry that another rule's row pushes past the
+    pruning cut must NOT be evicted: on reset a stale entry fires
+    (cnt 1 > count 0) where a missing one is re-created suppressed.  The
+    three micro-batches put foo at t, bar at t+200 s (the bucket's max
+    epoch moves past foo's window + one horizon) and foo again at
+    t+600 s, which the batch engine lets through."""
+    from sagan_spark.rules.compiler import compile_ruleset
+    rs = compile_ruleset("\n".join([
+        'alert syslog any any -> any any (msg:"a0"; content:"foo"; '
+        "after: track by_src, count 0, seconds 60; "
+        "classtype:misc-attack; sid:81; rev:1;)",
+        'alert syslog any any -> any any (msg:"t"; content:"bar"; '
+        "threshold: type limit, track by_src, count 5, seconds 60; "
+        "classtype:misc-attack; sid:82; rev:1;)",
+    ]))
+    rows = [{"conv_id": "c1", "turn_idx": i, "role": "user", "text": text,
+             "tool": "", "ts": pd.Timestamp(ts)}
+            for i, text, ts in [(0, "foo", "2026-01-01 12:00:00"),
+                                (1, "bar", "2026-01-01 12:03:20"),
+                                (2, "foo", "2026-01-01 12:10:00")]]
+    in_dir = str(tmp_path / "stream_count0")
+    for row in rows:   # one micro-batch each
+        _append_file(spark, pd.DataFrame([row]), in_dir)
+    batch = _batch_result(spark, rows, rs)
+    stream = _stream_result(spark, in_dir, rs, max_files=1)
+    last = batch[(batch["sid"] == 81) & (batch["turn_idx"] == 2)]
+    assert not last["suppress_after"].item()
+    pd.testing.assert_frame_equal(batch, stream)
+
+
+@pytest.mark.parametrize("rules", ["ipkeys_dual", "entry"])
+def test_stream_single_bucket_equal_batch(spark, ruleset, tmp_path, rules):
+    """Forced collision: with one state bucket every state key shares a
+    single CorrState, which must still reproduce the batch result (store
+    keys carry their full state key, so co-located keys never alias)."""
+    rs = _ipkeys_dual_ruleset(tmp_path) if rules == "ipkeys_dual" \
+        else ruleset
+    rows = gen_rows(12)
+    in_dir = str(tmp_path / f"stream_one_bucket_{rules}")
+    _write_chunks(spark, rows, in_dir, n_chunks=3)
+    batch = _batch_result(spark, rows, rs)
+    with _shuffle_partitions(spark, 1):
+        stream = _stream_result(spark, in_dir, rs, max_files=1)
+    assert batch["suppress_after"].any()
+    pd.testing.assert_frame_equal(batch, stream)
+
+
+def test_stream_restart_other_bucket_count_raises(spark, tmp_path):
+    """State keys are hashed into spark.sql.shuffle.partitions buckets;
+    restarting from the same checkpoint under another count would move
+    keys away from their state, so the query must fail instead."""
+    from pyspark.errors import StreamingQueryException
+    rs = compile_ruleset_from_dir(
+        os.path.join(os.path.dirname(__file__), "..", "rules-entry",
+                     "ipkeys"))
+    rows = gen_rows(12)
+    in_dir = str(tmp_path / "stream_restart_in")
+    ckpt = str(tmp_path / "stream_restart_ckpt")
+    out = str(tmp_path / "stream_restart_out")
+    pdf = pd.DataFrame(rows)
+    first, second = (pdf[pdf["turn_idx"] < 4], pdf[pdf["turn_idx"] >= 4])
+
+    def run(chunk, n):
+        _append_file(spark, chunk, in_dir)
+        with _shuffle_partitions(spark, n):
+            corr = streaming_alerts(
+                spark, read_transcript_stream(spark, in_dir), rs,
+                state_timeout_ms=0)
+            q = (corr.writeStream.format("parquet").option("path", out)
+                 .option("checkpointLocation", ckpt)
+                 .outputMode("append").start())
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run(first, 2)
+    # run_stream_to_parquet reads the count from the checkpoint and fails
+    # before the first trigger
+    with _shuffle_partitions(spark, 1), \
+            pytest.raises(RuntimeError, match="buckets"):
+        run_stream_to_parquet(spark, in_dir, out, rs, ckpt)
+    with pytest.raises(StreamingQueryException, match="buckets"):
+        run(second, 1)
+
+
+def test_stream_plan_is_one_stateful_operator(spark, tmp_path):
+    """One trigger's executed plan: the matcher runs once and feeds a
+    single applyInPandasWithState; no Union re-runs scan + match for
+    rows without a state key."""
+    rs = _ipkeys_dual_ruleset(tmp_path)
+    in_dir = str(tmp_path / "stream_plan")
+    _append_file(spark, pd.DataFrame(gen_rows(4)), in_dir)
+    corr = streaming_alerts(spark, read_transcript_stream(spark, in_dir),
+                            rs, state_timeout_ms=0)
+    q = (corr.writeStream.format("memory").queryName("plan_out")
+         .outputMode("append").start())
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+    finally:
+        q.stop()
+    names = []
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.getClass().getSimpleName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    assert names.count("FlatMapGroupsInPandasWithStateExec") == 1
+    assert names.count("MapInPandasExec") == 1
+    assert not [n for n in names if "Union" in n]
+
+
+class _FakeGroupState:
+    """The slice of GroupState the bucket correlator uses."""
+
+    hasTimedOut = False
+
+    def __init__(self):
+        self.blob = None
+
+    @property
+    def exists(self):
+        return self.blob is not None
+
+    @property
+    def get(self):
+        return (self.blob,)
+
+    def update(self, value):
+        self.blob = value[0]
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+
+@pytest.mark.parametrize("evict", [True, False])
+def test_bucket_state_stays_bounded(evict):
+    """Many short conversations, one day apart in event time, through one
+    bucket: with eviction on, count-0 after/threshold entries and
+    flexbit entries under a `count` clause (which the exact pruner must
+    keep) go once their conversation is two horizons (6 days) silent, so
+    the state holds only the recent conversations; with eviction off
+    they accumulate, as in the batch engine."""
+    from sagan_spark.match import build_matcher
+    from sagan_spark.rules.compiler import compile_ruleset
+    from sagan_spark.streaming import _bucket_correlator, \
+        default_state_timeout_ms
+    rules_dir = os.path.join(os.path.dirname(__file__), "..",
+                             "rules-entry", "flexbit")
+    with open(os.path.join(rules_dir, "flex.rules")) as fh:
+        text = fh.read()
+    rs = compile_ruleset("\n".join([
+        text,
+        'alert syslog any any -> any any (msg:"a0"; content:"foo"; '
+        "after: track by_src, count 0, seconds 60; "
+        "classtype:misc-attack; sid:81; rev:1;)",
+        'alert syslog any any -> any any (msg:"t0"; content:"bar"; '
+        "threshold: type limit, track by_src, count 0, seconds 60; "
+        "classtype:misc-attack; sid:82; rev:1;)",
+    ]))
+    assert default_state_timeout_ms(rs) == 2 * 259200 * 1000
+    match = build_matcher(rs)
+    fn = _bucket_correlator(rs, 1, default_state_timeout_ms(rs) if evict
+                            else 0)
+    state = _FakeGroupState()
+    day, per_batch, batches = 86400, 5, 30
+    entries = []
+    for b in range(batches):
+        t0 = 1_767_225_600 + b * day
+        turns = pd.DataFrame([
+            {"conv_id": f"c{b:03d}-{c}", "turn_idx": k, "role": "user",
+             "text": text, "tool": "",
+             "ts": pd.Timestamp(t0 + 10 * c + k, unit="s"),
+             "epoch": t0 + 10 * c + k}
+            for c in range(per_batch)
+            for k, text in enumerate(["stage1 marker", "probe attempt",
+                                      "foo", "foo", "bar", "bar"])])
+        matched = pd.concat(list(match(iter([turns]))), ignore_index=True)
+        matched["_bucket"] = 0
+        matched["_stateless"] = False
+        out = pd.concat(list(fn((0,), iter([matched]), state)))
+        assert len(out) == len(matched)
+        d = json.loads(state.blob)
+        entries.append(len(d["a"]) + len(d["t"]) + len(d["f"]))
+    per_conv = entries[0] // per_batch
+    assert per_conv == 4    # a0 + t0 + two flexbit sets per conversation
+    if evict:
+        # 6 days of conversations stay (plus the current one), never more
+        assert max(entries) <= 7 * per_batch * per_conv
+        assert entries[-1] == entries[10]
+    else:
+        assert entries[-1] == batches * per_batch * per_conv
