@@ -294,12 +294,10 @@ def _ipkeys_ruleset():
 
 # the four IP-keyed correlate queries consume one correlated frame;
 # memoize it per (session, sf_dir) — same rationale as _PIPE_CACHE — so
-# the driver's gate (and scale smokes) pay match + the 4-stage general
-# correlate ONCE, not once per query.  The general path's internal stage
-# persists are released as soon as the final frame is materialized, so
-# each cache entry holds exactly one persisted frame (freed by
-# clear_entry_caches).  correlate_dual_ip's staged-fallback frame is
-# memoized the same way under its own tag.
+# a gate run (and scale smokes) pay match + correlate ONCE, not once
+# per query.  Each cache entry holds exactly one persisted frame
+# (freed by clear_entry_caches).  correlate_dual_ip's frame is memoized
+# the same way under its own tag.
 #
 # Cache keying: (applicationId, sf_dir, tag) — applicationId is unique per
 # SparkContext lifetime, so a NEW session after a stop can never collide
@@ -327,29 +325,24 @@ def _cache_key(spark: SparkSession, sf_dir: str) -> tuple:
 
 
 def _memo_correlated(spark: SparkSession, sf_dir: str, tag: str,
-                     build: Callable[[list], DataFrame]) -> DataFrame:
-    """``build(persists)`` persisted, materialized and memoized in
-    _IP_CORR_CACHE under (session, sf_dir, tag); the stage frames the
-    build appends to ``persists`` are released as soon as the result has
-    materialized, so each entry holds exactly one persisted frame."""
+                     build: Callable[[], DataFrame]) -> DataFrame:
+    """``build()`` persisted, materialized and memoized in _IP_CORR_CACHE
+    under (session, sf_dir, tag)."""
     from pyspark import StorageLevel
     _evict_stopped(_IP_CORR_CACHE)
     key = (*_cache_key(spark, sf_dir), tag)
     cached = _IP_CORR_CACHE.get(key)
     if cached is not None:
         return cached[1]
-    stage_persists: list = []
-    df = build(stage_persists).persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()   # materialize, then free the per-stage intermediates
-    for frame in stage_persists:
-        frame.unpersist()
+    df = build().persist(StorageLevel.MEMORY_AND_DISK)
+    df.count()
     _IP_CORR_CACHE[key] = (spark, df)
     return df
 
 
 def _ip_correlated_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated frame for the IP-keyed corpus — parse_src_ip keys force
-    the staged GENERAL path in correlate.py (the reference's primary
+    """Correlated frame for the IP-keyed corpus — parse_src_ip keys take
+    the composite state key in correlate.py (the reference's primary
     deployment mode, after.c:108-110 hashes extracted addresses)."""
     from sagan_spark.correlate import conv_keyed_only, run_correlate
     from sagan_spark.match import run_match
@@ -357,9 +350,9 @@ def _ip_correlated_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     rs = _ipkeys_ruleset()
     assert not conv_keyed_only(rs)   # must exercise the general path
 
-    def build(persists: list) -> DataFrame:
+    def build() -> DataFrame:
         parsed = parse_transcripts(_transcripts(spark, sf_dir))
-        return run_correlate(run_match(parsed, rs), rs, persists=persists)
+        return run_correlate(run_match(parsed, rs), rs)
 
     return _memo_correlated(spark, sf_dir, "ipkeys", build)
 
@@ -600,8 +593,8 @@ def _q_match_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_correlate_after_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 on extracted-IP keys (after.c:108-110): the staged general
-    path's after fold, keyed by parse_src_ip addresses that recur across
+    """A1 on extracted-IP keys (after.c:108-110): the after fold over
+    composite keys of parse_src_ip addresses that recur across
     conversations."""
     return (_ip_correlated_df(spark, sf_dir).filter(F.col("sid") == 6400001)
             .select("conv_id", "turn_idx", "epoch", "ip_src",
@@ -617,7 +610,7 @@ def _q_correlate_threshold_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_correlate_xbit_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 with track ip_pair on extracted src (xbit-mmap.c:88-91): the
-    general path's keyed xbit stage."""
+    xbit fold over composite "x" keys."""
     return (_ip_correlated_df(spark, sf_dir).filter(F.col("sid") == 6400003)
             .select("conv_id", "turn_idx", "xbit_pass"))
 
@@ -645,19 +638,18 @@ def _q_correlate_dual_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1+A2 with DIFFERENT tracks on ONE rule: after keyed by the
     extracted src (after.c:113-117), threshold keyed by the conv-fallback
     dst (threshold.c:118-121), coupled by engine order — after-suppressed
-    rows never reach the threshold counter (engine.c:1528).  Batch takes
-    the STAGED fallback (two keyed stages, correlate.py); streaming runs
-    the same rule through the per-sid "d"-composite group and is
-    batch-equality-tested (test_stream_dual_track_equal_batch)."""
-    from sagan_spark.correlate import run_correlate, single_key_per_row
+    rows never reach the threshold counter (engine.c:1528).  Batch and
+    streaming fold the rule's rows in one per-sid "d"-composite group
+    (the streaming twin is test_stream_dual_track_equal_batch)."""
+    from sagan_spark.correlate import dual_track_rules, run_correlate
     from sagan_spark.match import run_match
     from sagan_spark.parse import parse_transcripts
     rs = _dual_ruleset()
-    assert not single_key_per_row(rs)   # must exercise the staged path
+    assert dual_track_rules(rs)   # must exercise the per-sid "d" key
 
-    def build(persists: list) -> DataFrame:
+    def build() -> DataFrame:
         parsed = parse_transcripts(_transcripts(spark, sf_dir))
-        corr = run_correlate(run_match(parsed, rs), rs, persists=persists)
+        corr = run_correlate(run_match(parsed, rs), rs)
         return corr.select("conv_id", "turn_idx", "epoch",
                            "suppress_after", "suppress_thresh")
 
@@ -2075,9 +2067,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     of any two consecutive gates covers all 58 registered queries: the
     round-4 tail (text_fingerprint … simhash64) is back inside this
     window, and 7 queries gated green in r04 (and every earlier round
-    they were registered) rotate out.  The tail additionally has an
-    ENFORCED check every pytest run — tests/test_oracle_tail.py runs the
-    full tail through the same Spark-vs-DuckDB oracle compare."""
+    they were registered) rotate out.  Every entry, inside the window or
+    not, has an ENFORCED check every pytest run — tests/test_oracle_tail.py
+    runs the whole registry through the same Spark-vs-DuckDB oracle
+    compare."""
     return {
         "pipeline_alerts": _q_pipeline_alerts,
         "sink_counts": _q_sink_counts,
@@ -2102,8 +2095,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "correlate_threshold_ip": _q_correlate_threshold_ip,
         "correlate_xbit_pair": _q_correlate_xbit_pair,
         "correlate_flexbit_ip": _q_correlate_flexbit_ip,
-        # round-5: after+threshold with DIFFERENT tracks on one rule (the
-        # staged-fallback shape, now also streamable via the "d"+sid group)
+        # round-5: after+threshold with DIFFERENT tracks on one rule,
+        # folded per sid ("d" key) in batch and streaming
         "correlate_dual_ip": _q_correlate_dual_ip,
         "blacklist_gate": _q_blacklist_gate,
         "match_facility_quirk": _q_match_facility_quirk,
@@ -2137,8 +2130,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "perfmon": _q_perfmon,
         # ---- tail (gate window ends at 50): queries gated green in r04
         # (and every earlier round they were registered), UNTOUCHED by
-        # round-5 changes, and still enforced per pytest run by
-        # tests/test_oracle_tail.py ----
+        # round-5 changes, and enforced per pytest run, like every entry,
+        # by tests/test_oracle_tail.py ----
         "match_meta_user": _q_match_meta_user,
         "match_program_gate": _q_match_program_gate,
         "extract_hash": _q_extract_hash,

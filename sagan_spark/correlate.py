@@ -15,27 +15,26 @@ Spark partition-local dict entry:
                    state) entries compared direction-specifically
                    (flexbit-mmap.c:61-1494)
 
-Execution strategy (scale notes):
+Execution strategy (scale notes): ONE plan for every ruleset, batch and
+streaming alike.  state_group_key gives every matched row one state key,
+which co-locates every row that can touch the same store entry, and the
+engine folds each key's rows in EXACT engine order (engine.c:1132-1570:
+flexbit/xbit conditions gate → after → threshold → xbit/flexbit sets only
+when not suppressed) through unified_fold:
 
-* **Fast path** (all correlation keys conv-derived — the common
-  transcript case): ONE ``repartition(conv_id) → sortWithinPartitions →
-  mapInPandas`` running a single per-row fold in EXACT engine order
-  (engine.c:1132-1570: flexbit/xbit conditions gate → after → threshold
-  → xbit/flexbit sets only when not suppressed).  One shuffle of matched
-  rows, one Arrow round-trip, and every cross-clause interaction —
-  xbit⊕after, multi-track xbits, flexbit counts — is handled because the
-  fold IS the engine's per-event order.
-* **General path** (IP-extracted keys): one keyed stage per clause type,
-  shuffling only the rows that carry the stage's key.  Cross-clause
-  combinations (xbit/flexbit + after/threshold in ONE rule) are rejected
-  here at plan time — their state keys differ, so no single partitioning
-  co-locates the interaction; the reference runs them in one
-  shared-memory pass (engine.c:1132/1516/1560) that has no distributed
-  equivalent without a serial stage.  Flexbit rules with extracted IPs
-  (or the 'none' direction, flexbit-mmap.c:124) fold per flexbit
-  NAME-GROUP (flexbit_groups): entries are name-scoped, so independent
-  names partition exactly; only a `count` clause (name-agnostic scan)
-  couples groups into one serial fold.
+* batch: ``repartition(key) → sortWithinPartitions(key, _SORT) →`` one
+  ``mapInPandas``, one shuffle of matched rows and one Arrow round-trip;
+* streaming: one ``applyInPandasWithState`` over hash buckets of the
+  same key (streaming.py).
+
+The key is ``conv_id`` plus the state-group salt when every correlation
+key is conv-derived (the common transcript case, where every clause
+combination is exact), else the composite general_group_key_col
+(IP-extracted keys, 'none'-direction flexbits).  Composite keys cover
+one store each, so rules needing two stores on one row are rejected at
+plan time (validate_ruleset_for_spark); after + threshold with different
+tracks share the per-sid "d" key instead.
+
 * Deterministic (epoch, conv_id, turn_idx, rule_idx) order inside each
   key — the batch replacement for the reference's wall-clock arrival
   order (SURVEY §2.6).
@@ -82,8 +81,7 @@ def has_none_flexbits(ruleset: RuleSet) -> bool:
                if fb.action in ("isset", "isnotset", "unset"))
 
 
-def conv_keyed_only(ruleset: RuleSet,
-                    ignore_none_flexbits: bool = False) -> bool:
+def conv_keyed_only(ruleset: RuleSet) -> bool:
     """True when every stateful rule's correlation keys are functions of
     conv_id alone (the host-fallback path, engine.c:967-1045): no
     parse_src_ip/parse_dst_ip/parse_port/normalize on a rule that has
@@ -92,12 +90,7 @@ def conv_keyed_only(ruleset: RuleSet,
     flexbit uses the cross-conv 'none' direction.  Then ONE
     conv_id-hash repartition co-locates every correlation key — the
     north star's explicit conv_id partitioning — and the whole stateful
-    stage is a single shuffle + one engine-order fold.
-
-    ``ignore_none_flexbits=True`` answers the weaker question "is
-    conv_id the only cross-rule key, modulo 'none' flexbit sharing?" —
-    the streaming correlator uses it to route such rulesets through a
-    single global state group instead of rejecting them."""
+    stage is a single shuffle + one engine-order fold."""
     for r in ruleset.rules:
         if not (r.after or r.threshold or r.xbits or r.flexbits):
             continue
@@ -108,9 +101,7 @@ def conv_keyed_only(ruleset: RuleSet,
             return False
         if r.threshold and not _track_conv_derived(r.threshold.tracks):
             return False
-    if not ignore_none_flexbits and has_none_flexbits(ruleset):
-        return False
-    return True
+    return not has_none_flexbits(ruleset)
 
 
 def state_groups(ruleset: RuleSet) -> dict[int, int]:
@@ -204,29 +195,18 @@ def flexbit_groups(ruleset: RuleSet) -> dict[int, int]:
 GSEP = "\x1f"
 
 
-def single_key_per_row(ruleset: RuleSet) -> bool:
-    """True when every matched row carries exactly ONE state-group key —
-    the precondition of the composite-key general path (batch) and the
-    general streaming correlator.  Outside the conv fast path the
-    validator already rejects cross-clause rules, so the only multi-key
-    shape left is after + threshold with DIFFERENT track sets on one
-    rule (after_key != thresh_key row-wise → two keyed stages)."""
-    return not dual_track_rules(ruleset)
-
-
 def dual_track_rules(ruleset: RuleSet) -> list[int]:
     """rule_idx of rules carrying after AND threshold with DIFFERENT
     track sets — the one IP-keyed shape whose two state keys differ
     row-wise (after.c:113-117 and threshold.c:118-121 each key by their
-    own track value).  The batch engine runs these through the staged
-    fallback (two keyed stages, each parallel over its track keyspace);
-    the composite key routes them to ONE group per sid ("d"<GSEP>sid in
-    general_group_key_col) — both stores are sid-scoped, so a per-sid
-    group co-locates every row either store can touch and the unified
-    fold reproduces engine order exactly.  Per-sid grouping serializes
-    the rule's rows through one partition/state group, which is the
-    price of single-pass semantics; streaming (which cannot chain two
-    stateful operators) takes it, batch prefers the staged stages."""
+    own track value).  The composite key routes them to ONE group per
+    sid ("d"<GSEP>sid in general_group_key_col) — both stores are
+    sid-scoped, so a per-sid group co-locates every row either store can
+    touch and the unified fold reproduces engine order exactly
+    (after-suppressed rows never reach the threshold counter,
+    engine.c:1528).  Per-sid grouping serializes the rule's rows through
+    one partition (batch) or state bucket (streaming), which is the
+    price of single-pass semantics."""
     return [i for i, r in enumerate(ruleset.rules)
             if r.after and r.threshold
             and r.after.tracks != r.threshold.tracks]
@@ -297,8 +277,8 @@ def general_group_key_col(ruleset: RuleSet):
                                   every non-dual-track rule)
 
     NULL for rows touching no store (stateless rules, or stateful rules
-    whose track value is missing — the staged path passes those through
-    with default flags, and so do callers of this key)."""
+    whose track value is missing); such rows keep the default flags
+    (state_group_key)."""
     from pyspark.sql import functions as F
 
     fgroups = flexbit_groups(ruleset)
@@ -343,6 +323,33 @@ def general_group_key_col(ruleset: RuleSet):
     return expr
 
 
+def state_group_key(ruleset: RuleSet):
+    """(key, stateless) column exprs for a matched row — the one
+    state-key decision both engines partition by (batch repartition,
+    streaming bucket hash):
+
+    * conv-derived keys (conv_keyed_only): conv_id salted by the rule's
+      state group (state_groups), so a hot conversation's rows spread
+      over its independent groups.  Group 0 adds no salt, so a
+      single-group ruleset is keyed by conv_id alone;
+    * otherwise the composite general_group_key_col.  Where it is NULL
+      the row touches no store: ``stateless`` is true, the row keeps the
+      default flags, and the key falls back to conv_id so such rows
+      spread instead of piling into one partition.
+
+    The key is never NULL."""
+    from pyspark.sql import functions as F
+
+    if conv_keyed_only(ruleset):
+        sg = F.create_map(*[F.lit(x) for i, g in state_groups(ruleset).items()
+                            for x in (i, g)])[F.col("rule_idx")]
+        return (F.concat_ws(GSEP, F.col("conv_id"),
+                            F.when(sg > 0, sg.cast("string"))),
+                F.lit(False))
+    gkey = general_group_key_col(ruleset)
+    return F.coalesce(gkey, F.col("conv_id")), gkey.isNull()
+
+
 def validate_ruleset_for_spark(ruleset: RuleSet) -> None:
     """Plan-time restrictions that apply ONLY outside the conv-keyed fast
     path (where the unified fold handles every combination exactly)."""
@@ -356,9 +363,8 @@ def validate_ruleset_for_spark(ruleset: RuleSet) -> None:
                 "(engine.c:1132/1516/1560 one-pass semantics); only "
                 "conv-derived keys support this in distributed mode")
         if r.xbits and r.flexbits:
-            # the staged path would apply each store's sets ignoring the
-            # OTHER store's gate on the same row; only the unified fold
-            # interleaves them in engine order
+            # the row would need an "x" AND an "f" state key; only the
+            # conv key co-locates both stores' entries
             raise ValueError(
                 f"sid {r.sid}: xbits and flexbits in one rule need the "
                 "conv-keyed fast path (cross-store gate interleaving)")
@@ -369,8 +375,7 @@ def validate_ruleset_for_spark(ruleset: RuleSet) -> None:
 
 
 # ---------------------------------------------------------------------------
-# per-key state machines (shared by the unified fold, the staged general
-# path, and the streaming correlator)
+# per-key state machines (stepped by the unified fold)
 # ---------------------------------------------------------------------------
 
 def _after_update(spec, state: dict, key, t: int) -> bool:
@@ -447,7 +452,7 @@ def _xbit_apply(rule, store: dict, ip_src: str, ip_dst: str,
 
 
 # ---------------------------------------------------------------------------
-# the unified engine-order fold (conv-keyed fast path + streaming)
+# the unified engine-order fold (batch + streaming)
 # ---------------------------------------------------------------------------
 
 class CorrState:
@@ -528,284 +533,56 @@ def apply_fold_to_batches(fold, st: CorrState,
         yield pdf
 
 
-# ---------------------------------------------------------------------------
-# staged general path (IP-extracted keys)
-# ---------------------------------------------------------------------------
-
-def _after_fold(ruleset: RuleSet):
-    """Batch wrapper over _after_update for the keyed stage."""
-    def fold(pdf: pd.DataFrame, state: dict) -> list[bool]:
-        flags = []
-        for sid, rev, key, t, ridx in zip(
-                pdf["sid"].tolist(), pdf["rev"].tolist(),
-                pdf["after_key"].tolist(), pdf["epoch"].tolist(),
-                pdf["rule_idx"].tolist()):
-            if key is None:
-                flags.append(False)
-                continue
-            flags.append(_after_update(ruleset.rules[ridx].after, state,
-                                       (sid, rev, key), t))
-        return flags
-    return fold
-
-
-def _threshold_fold(ruleset: RuleSet):
-    def fold(pdf: pd.DataFrame, state: dict) -> list[bool]:
-        flags = []
-        for sid, key, t, ridx in zip(
-                pdf["sid"].tolist(), pdf["thresh_key"].tolist(),
-                pdf["epoch"].tolist(), pdf["rule_idx"].tolist()):
-            if key is None:
-                flags.append(False)
-                continue
-            flags.append(_thresh_update(ruleset.rules[ridx].threshold,
-                                        state, (sid, key), t))
-        return flags
-    return fold
-
-
-def _xbit_fold(ruleset: RuleSet):
-    """Keyed-stage xbit fold (single-track rules: the xbit_key column IS
-    the track value, so (name, key) addressing matches the store)."""
-    def fold(pdf: pd.DataFrame, state: dict) -> list[bool]:
-        flags = []
-        for key, t, ridx, src, dst in zip(
-                pdf["xbit_key"].tolist(), pdf["epoch"].tolist(),
-                pdf["rule_idx"].tolist(), pdf["ip_src"].tolist(),
-                pdf["ip_dst"].tolist()):
-            if key is None:
-                flags.append(True)
-                continue
-            rule = ruleset.rules[ridx]
-            passed = _xbit_condition(rule, state, src, dst, t)
-            if passed:
-                _xbit_apply(rule, state, src, dst, t)
-            flags.append(passed)
-        return flags
-    return fold
-
-
-def _flexbit_serial_fold(ruleset: RuleSet):
-    """Per-group flexbit fold for IP-extracted / 'none'-direction rules:
-    gates + sets, engine order, over one name-group's rows at a time.
-    after/threshold are rejected on these rules (validator), so the gate
-    alone decides and sets always fire on gate-pass (engine.c:1560)."""
-    def fold(pdf: pd.DataFrame, flex: FlexStore) -> list[bool]:
-        flags = []
-        for ridx, t, src, dst, sport, dport in zip(
-                pdf["rule_idx"].tolist(), pdf["epoch"].tolist(),
-                pdf["ip_src"].tolist(), pdf["ip_dst"].tolist(),
-                pdf["src_port"].tolist(), pdf["dst_port"].tolist()):
-            rule = ruleset.rules[ridx]
-            cond_ret = flex.condition(rule, src, dst, sport, dport, t)
-            count_ret = flex.count_check(rule, src, dst)
-            ok = flexbit_gate(rule, cond_ret, count_ret)
-            if ok:
-                flex.apply_sets(rule, src, dst, sport, dport, t)
-            flags.append(ok)
-        return flags
-    return fold
-
-
-def _run_stage(df, key_cols: list[str], fold_factory, flag_col: str,
-               ruleset: RuleSet):
-    """One stateful stage: shuffle by key (NULL keys salted by
-    (conv_id, sid) to avoid a degenerate partition), sort within
-    partitions, single mapInPandas pass with cross-batch state."""
+def with_default_flags(matches):
+    """matches (MATCH_SCHEMA) + the CORR_SCHEMA flags every row carries
+    before the fold: nothing suppressed, every gate passed."""
     from pyspark.sql import functions as F
 
-    key = F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols])
-    part_expr = F.when(
-        F.col(key_cols[-1]).isNull(),
-        F.concat_ws("\x1f", F.lit("\x00null"), F.col("conv_id"),
-                    F.col("sid").cast("string"))).otherwise(key)
-    rep = (df.repartition(part_expr)
-             .sortWithinPartitions(*key_cols, *_SORT))
-    fold = fold_factory(ruleset)
+    return (matches
+            .withColumn("suppress_after", F.lit(False))
+            .withColumn("suppress_thresh", F.lit(False))
+            .withColumn("xbit_pass", F.lit(True))
+            .withColumn("flexbit_pass", F.lit(True)))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict = {}
-        for pdf in batches:
-            pdf[flag_col] = pd.Series(fold(pdf, state), dtype=bool,
-                                      index=pdf.index)
-            yield pdf
 
-    return rep.mapInPandas(run, schema=CORR_SCHEMA)
+def has_state(ruleset: RuleSet) -> bool:
+    return any(r.after or r.threshold or r.xbits or r.flexbits
+               for r in ruleset.rules)
 
 
 def run_correlate(matches, ruleset: RuleSet, persists: list | None = None):
     """matches (MATCH_SCHEMA) → matches + suppression/gate flags
-    (CORR_SCHEMA).  Frames persisted internally are appended to
-    ``persists`` (when given) so the caller can unpersist exactly those —
-    never a blanket ``clearCache`` that would evict caller caches.
+    (CORR_SCHEMA), in ONE plan for every ruleset: repartition by the
+    row's state key (state_group_key) → sortWithinPartitions(key, _SORT)
+    → one mapInPandas running unified_fold over one CorrState per
+    partition.  One shuffle of matched rows, one Arrow round-trip, the
+    matcher computed once.  Sharing a CorrState across the keys of a
+    partition is exact because every store key carries its full state
+    key ((sid,rev,after_key), (sid,thresh_key), (name,track-value),
+    flexbit (name,src,dst)) and a flexbit `count` clause couples all its
+    names into one key, so co-located keys never alias.
 
-    Fast path (all correlation keys conv-derived — the common transcript
-    case): ONE repartition(conv_id) + sortWithinPartitions + a single
-    mapInPandas running the unified engine-order fold.  One shuffle of
-    matched rows, one Arrow round-trip, no persists, every clause
-    combination supported.
-
-    General path (IP-extracted keys): one keyed stage per clause type —
-    the Arrow round-trip and shuffle are paid ONLY for rows carrying the
-    stage's key.  The matched frame and each folded output are persisted
-    MEMORY_AND_DISK so the filter/union branches are cache reads, never
-    matcher recomputes."""
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
+    Nothing is persisted: ``persists`` (for callers that collect the
+    frames a run persisted) is left empty."""
     validate_ruleset_for_spark(ruleset)
-    df = (matches
-          .withColumn("suppress_after", F.lit(False))
-          .withColumn("suppress_thresh", F.lit(False))
-          .withColumn("xbit_pass", F.lit(True))
-          .withColumn("flexbit_pass", F.lit(True)))
-
-    has_after = any(r.after for r in ruleset.rules)
-    has_thresh = any(r.threshold for r in ruleset.rules)
-    has_xbit = any(r.xbits for r in ruleset.rules)
-    has_flex = any(r.flexbits for r in ruleset.rules)
-    if not (has_after or has_thresh or has_xbit or has_flex):
+    df = with_default_flags(matches)
+    if not has_state(ruleset):
         return df
+    key, stateless = state_group_key(ruleset)
+    rep = (df.withColumn("_skey", key)
+             .withColumn("_stateless", stateless)
+             .repartition("_skey")
+             .sortWithinPartitions("_skey", *_SORT)
+             .drop("_skey"))
+    fold = unified_fold(ruleset)
 
-    if conv_keyed_only(ruleset):
-        # hot-conversation salt: partition by (conv_id, state-group) —
-        # rules in different groups share no state (state_groups), so a
-        # hot conv's rows spread across #groups partitions exactly
-        groups = state_groups(ruleset)
-        n_groups = len(set(groups.values()))
-        if n_groups > 1:
-            gmap = F.create_map(*[F.lit(x) for i, g in groups.items()
-                                  for x in (i, g)])
-            df = df.withColumn("_sg", gmap[F.col("rule_idx")])
-            rep = (df.repartition(F.col("conv_id"), F.col("_sg"))
-                     .sortWithinPartitions("conv_id", "_sg", "epoch",
-                                           "turn_idx", "rule_idx")
-                     .drop("_sg"))
-        else:
-            rep = (df.repartition(F.col("conv_id"))
-                     .sortWithinPartitions("conv_id", "epoch", "turn_idx",
-                                           "rule_idx"))
-        fold = unified_fold(ruleset)
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        st = CorrState()
+        for pdf in batches:
+            stateless = pdf.pop("_stateless").to_numpy()
+            if stateless.any():
+                yield pdf[stateless]
+                pdf = pdf[~stateless].reset_index(drop=True)
+            yield from apply_fold_to_batches(fold, st, [pdf])
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            yield from apply_fold_to_batches(fold, CorrState(), batches)
-
-        return rep.mapInPandas(run, schema=CORR_SCHEMA)
-
-    if single_key_per_row(ruleset):
-        # composite-key general path — the common IP-extracted shape.
-        # Every stateful row carries exactly one state-group key, so the
-        # plan collapses to the SAME shape as the conv fast path: one
-        # repartition(_gkey) + sortWithinPartitions + one unified-fold
-        # mapInPandas — instead of the staged path's per-clause shuffle +
-        # persist + filter/union chain (4 shuffles and 5 cached frames on
-        # a 4-clause ruleset; >3x the wall at 10M turns).  Correct
-        # because unified_fold keys every store by row-level values
-        # ((sid,rev,after_key), (sid,thresh_key), (name,track-value),
-        # flexbit (name,src,dst)): the shuffle only needs to CO-LOCATE
-        # rows of equal state keys, which _gkey does by construction,
-        # and a partition-shared CorrState cannot alias across groups
-        # (keys are globally unique; flexbit tallies are name-scoped and
-        # `count` coupling is already one group).  Stateless rows bypass
-        # the shuffle entirely.
-        gkey = general_group_key_col(ruleset)
-        keyed = df.withColumn("_gkey", gkey)
-        passthru = keyed.filter(F.col("_gkey").isNull()).drop("_gkey")
-        rep = (keyed.filter(F.col("_gkey").isNotNull())
-               .repartition(F.col("_gkey"))
-               .sortWithinPartitions("_gkey", *_SORT))
-        fold = unified_fold(ruleset)
-
-        def run_gen(batches: Iterator[pd.DataFrame]
-                    ) -> Iterator[pd.DataFrame]:
-            def stripped():
-                for pdf in batches:
-                    yield pdf.drop(columns=["_gkey"])
-            yield from apply_fold_to_batches(fold, CorrState(), stripped())
-
-        return (rep.mapInPandas(run_gen, schema=CORR_SCHEMA)
-                .unionByName(passthru))
-
-    # staged fallback: after + threshold with different tracks on one
-    # rule needs two keyed stages (one shuffle per clause type)
-
-    def _track(frame):
-        if persists is not None:
-            persists.append(frame)
-        return frame
-
-    df = _track(df.persist(StorageLevel.MEMORY_AND_DISK))
-
-    # xbit/flexbit gates evaluate BEFORE after/threshold in the engine
-    # (engine.c:1132-1151 vs 1516); with cross-clause rules rejected by
-    # the validator the stages are independent, so stage order here only
-    # fixes the flag columns, not semantics.
-    if has_xbit:
-        keyed = df.filter(F.col("xbit_key").isNotNull())
-        folded = _track(_run_stage(keyed, ["xbit_key"], _xbit_fold,
-                                   "xbit_pass", ruleset)
-                        .persist(StorageLevel.MEMORY_AND_DISK))
-        df = df.filter(F.col("xbit_key").isNull()).unionByName(folded)
-
-    if has_flex:
-        import numpy as np
-
-        fgroups = flexbit_groups(ruleset)
-        # membership by rule_idx (the same key _fg maps), NOT sid: a sid
-        # shared between a flexbit and a non-flexbit rule would pass a
-        # sid filter with a null _fg and crash run_flex's int(g)
-        flex_idx = list(fgroups)
-        # partition the flexbit fold by name-group (flexbit_groups): state
-        # never crosses a flexbit name, so each group folds independently —
-        # serial work is bounded by the largest coupled group (ONLY a
-        # `count` clause couples globally), not the whole flexbit row set
-        gmap = F.create_map(*[F.lit(x) for i, g in fgroups.items()
-                              for x in (i, g)])
-        keyed = (df.filter(F.col("rule_idx").isin(flex_idx))
-                   .withColumn("_fg", gmap[F.col("rule_idx")])
-                   .repartition(F.col("_fg"))
-                   .sortWithinPartitions("_fg", *_SORT))
-        fold = _flexbit_serial_fold(ruleset)
-
-        def run_flex(batches: Iterator[pd.DataFrame]
-                     ) -> Iterator[pd.DataFrame]:
-            # one FlexStore per group: hash-partitioning may co-locate
-            # several groups, and Arrow may split a group across batches
-            stores: dict[int, FlexStore] = {}
-            for pdf in batches:
-                fg = pdf["_fg"].to_numpy()
-                pdf = pdf.drop(columns=["_fg"])
-                flags = np.empty(len(pdf), dtype=bool)
-                for g in pd.unique(fg):
-                    idx = np.nonzero(fg == g)[0]
-                    store = stores.setdefault(int(g), FlexStore())
-                    flags[idx] = fold(pdf.iloc[idx], store)
-                pdf["flexbit_pass"] = pd.Series(flags, dtype=bool,
-                                                index=pdf.index)
-                yield pdf
-
-        folded = _track(keyed.mapInPandas(run_flex, schema=CORR_SCHEMA)
-                        .persist(StorageLevel.MEMORY_AND_DISK))
-        df = df.filter(~F.col("rule_idx").isin(flex_idx)).unionByName(folded)
-
-    if has_after:
-        keyed = df.filter(F.col("after_key").isNotNull())
-        folded = _track(_run_stage(keyed, ["sid", "rev", "after_key"],
-                                   _after_fold, "suppress_after", ruleset)
-                        .persist(StorageLevel.MEMORY_AND_DISK))
-        df = df.filter(F.col("after_key").isNull()).unionByName(folded)
-
-    # threshold: after-suppressed rows never reach the threshold counter
-    # (engine.c:1528: Threshold2 called only when after_log_flag == false)
-    if has_thresh:
-        keyed = df.filter(F.col("thresh_key").isNotNull() &
-                          ~F.col("suppress_after"))
-        rest = df.filter(F.col("thresh_key").isNull() |
-                         F.col("suppress_after"))
-        folded = _track(_run_stage(keyed, ["sid", "thresh_key"],
-                                   _threshold_fold, "suppress_thresh",
-                                   ruleset)
-                        .persist(StorageLevel.MEMORY_AND_DISK))
-        df = rest.unionByName(folded)
-
-    return df
+    return rep.mapInPandas(run, schema=CORR_SCHEMA)

@@ -29,30 +29,26 @@ tests/test_streaming.py).
 
 Key routing.  Like the reference, which keeps correlation state in a few
 shared stores addressed by a hash of the track string (after.c:113-117,
-threshold.c:118-121, xbit-mmap.c:88-91), every matched row gets a state
-key and the stateful operator groups by
+threshold.c:118-121, xbit-mmap.c:88-91), every matched row gets the
+state key the batch engine partitions by (correlate.state_group_key:
+conv_id plus the state-group salt when every key is conv-derived, else
+the composite "x" / "f" / "a" / per-sid "d" key) and the stateful
+operator groups by
 
-    _bucket = pmod(xxhash64(coalesce(state_key, conv_id)), n)
+    _bucket = pmod(xxhash64(state key), n)
 
 with ``n`` = the session's ``spark.sql.shuffle.partitions`` when the
-query is built.  The state key is (_state_key):
+query is built.  Rows flagged stateless (NULL composite key, keyed by
+conv_id) go through the same call and keep the default flags, so the
+matcher feeds one operator and no union.
 
-* conv_id on the conv-derived fast path;
-* the constant ``__global__`` when the only cross-conv state is
-  'none'-direction flexbit sharing (one bucket folds every row);
-* the batch composite key (general_group_key_col) for IP-extracted keys:
-  "x"+xbit_key, "f"+flexbit name-group, "a"+sid+track-value, or — for
-  after+threshold with DIFFERENT tracks on one rule, whose two stores are
-  both sid-scoped — "d"+sid.  Rows whose composite key is NULL touch no
-  store: they go through the same call (bucketed by conv_id) and keep
-  the default flags, so the matcher feeds one operator and no union.
-
-One CorrState per bucket is exact for the same reason the batch
-composite-key path shares one per partition: every store key carries its
-full state key, so co-located keys never alias.  ``n`` is stored in the
-state blob; a restart from the same checkpoint under a different
-partition count would move keys to other buckets, so it raises instead
-(see streaming_alerts for when).
+One CorrState per bucket is exact for the same reason the batch engine
+shares one per partition: every store key carries its full state key, so
+co-located keys never alias.  The state blob records ``n`` and the
+key-scheme version (_KEY_SCHEME); a restart from the same checkpoint
+under another partition count or key scheme would find keys in other
+buckets than their state, so it raises instead (see streaming_alerts for
+when).
 
 Event-time bound (the one the pruner assumes): store eviction is exact
 while event-time disorder stays within ONE horizon (the largest rule
@@ -88,10 +84,11 @@ from .correlate import (
     FlexStore,
     _SORT,
     apply_fold_to_batches,
-    conv_keyed_only,
-    general_group_key_col,
+    has_state,
+    state_group_key,
     unified_fold,
     validate_ruleset_for_spark,
+    with_default_flags,
 )
 from .datagen import TRANSCRIPTS_SCHEMA
 from .match import MATCH_SCHEMA, build_matcher, candidate_filter
@@ -100,6 +97,9 @@ from .rules.compiler import RuleSet
 
 # GroupState layout: one JSON blob (the four stores, key-stringified)
 STATE_SCHEMA = "state string"
+# version of the state-key -> bucket mapping (correlate.state_group_key)
+# the blobs were written under; bump it whenever a key changes
+_KEY_SCHEME = 2
 
 
 def _encode_state(st: CorrState, n_buckets: int, max_epoch: int,
@@ -112,6 +112,7 @@ def _encode_state(st: CorrState, n_buckets: int, max_epoch: int,
         "s": [[a, t] for a, t in seen.items()],  # flexbit address last-seen
         "m": max_epoch,   # max event epoch ever seen (pruner anchor)
         "n": n_buckets,   # bucket count the keys were hashed with
+        "v": _KEY_SCHEME,  # how rows were keyed before hashing
     })
 
 
@@ -129,6 +130,13 @@ def _check_buckets(blob: str, n_buckets: int) -> dict:
         # now landing here belong to other keys, and their own state sits
         # in buckets this query no longer routes them to
         raise RuntimeError(_bucket_mismatch(d.get("n"), n_buckets))
+    if d.get("v") != _KEY_SCHEME:
+        # same bucket count, but rows were keyed differently: their
+        # state may sit in another bucket
+        raise RuntimeError(
+            "streaming state was written under another state-key scheme "
+            f"than this engine's (version {_KEY_SCHEME}); restart from a "
+            "fresh checkpoint")
     return d
 
 
@@ -358,20 +366,13 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
     pref = candidate_filter(ruleset)
     if pref is not None:
         needed = needed.filter(pref)
-    matches = needed.mapInPandas(build_matcher(ruleset),
-                                 schema=MATCH_SCHEMA)
-    base = (matches
-            .withColumn("suppress_after", F.lit(False))
-            .withColumn("suppress_thresh", F.lit(False))
-            .withColumn("xbit_pass", F.lit(True))
-            .withColumn("flexbit_pass", F.lit(True)))
-    if not any(r.after or r.threshold or r.xbits or r.flexbits
-               for r in ruleset.rules):
+    base = with_default_flags(
+        needed.mapInPandas(build_matcher(ruleset), schema=MATCH_SCHEMA))
+    if not has_state(ruleset):
         return base
-    skey, stateless = _state_key(ruleset)
+    key, stateless = state_group_key(ruleset)
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bucket = F.pmod(F.xxhash64(F.coalesce(skey, F.col("conv_id"))),
-                    F.lit(n_buckets))
+    bucket = F.pmod(F.xxhash64(key), F.lit(n_buckets))
     return (base.withColumn("_bucket", bucket)
             .withColumn("_stateless", stateless)
             .groupBy("_bucket")
@@ -383,27 +384,6 @@ def streaming_alerts(spark, transcripts_stream, ruleset: RuleSet,
                 outputMode="append",
                 timeoutConf=("ProcessingTimeTimeout" if state_timeout_ms
                              else "NoTimeout")))
-
-
-def _state_key(ruleset: RuleSet):
-    """(state key, no-state-key flag) column exprs for a matched row.
-
-    * conv-derived keys (fast path): conv_id;
-    * rulesets whose ONLY cross-conv state is 'none'-direction flexbit
-      sharing (flexbit-mmap.c:124 matches any src/dst): the constant
-      ``__global__``, so every row folds in one bucket;
-    * IP-extracted keys: the composite general_group_key_col, shared
-      with the batch composite-key path (dual-track rules get a per-sid
-      "d" key).  It is NULL for rows touching no store, which keep the
-      default flags."""
-    from pyspark.sql import functions as F
-
-    if conv_keyed_only(ruleset):
-        return F.col("conv_id"), F.lit(False)
-    if conv_keyed_only(ruleset, ignore_none_flexbits=True):
-        return F.lit("__global__"), F.lit(False)
-    gkey = general_group_key_col(ruleset)
-    return gkey, gkey.isNull()
 
 
 def run_stream_to_parquet(spark, in_path: str, out_path: str,

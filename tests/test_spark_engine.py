@@ -596,39 +596,3 @@ def test_checkpoint_resume(spark, tmp_path, monkeypatch):
         return (p[cols].sort_values(cols).reset_index(drop=True))
 
     _pd.testing.assert_frame_equal(_read(out_full), _read(out_ck))
-
-
-def test_general_composite_equals_staged(spark, monkeypatch):
-    """The composite-key general path (one shuffle + unified fold) and
-    the staged per-clause fallback (one shuffle per clause type) are two
-    physical plans for the SAME semantics; pin them bit-equal on the
-    ipkeys corpus so the fallback can't rot now that single-key rulesets
-    default to the composite plan."""
-    import os
-
-    import sagan_spark.correlate as C
-    from sagan_spark.match import run_match
-    from sagan_spark.parse import parse_transcripts
-
-    rs = compile_ruleset_from_dir(
-        os.path.join(os.path.dirname(__file__), "..", "rules-entry",
-                     "ipkeys"))
-    assert C.single_key_per_row(rs) and not C.conv_keyed_only(rs)
-    rows = gen_rows(16)
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    matches = run_match(parse_transcripts(df), rs)
-
-    cols = ["conv_id", "turn_idx", "sid", "suppress_after",
-            "suppress_thresh", "xbit_pass", "flexbit_pass"]
-
-    def result():
-        return (C.run_correlate(matches, rs).select(*cols).toPandas()
-                .sort_values(cols).reset_index(drop=True))
-
-    composite = result()
-    monkeypatch.setattr(C, "single_key_per_row", lambda _: False)
-    staged = result()
-    # both pass outcomes occur, or the corpus isn't exercising state
-    assert composite["suppress_after"].any()
-    assert set(composite["xbit_pass"].unique()) == {True, False}
-    pd.testing.assert_frame_equal(composite, staged)

@@ -140,8 +140,8 @@ def test_stream_equals_batch_across_microbatches(spark, ruleset, tmp_path):
 def test_stream_ipkeys_equal_batch(spark, tmp_path):
     """IP-extracted correlation keys — the reference's PRIMARY deployment
     mode (after.c:108-110 hashes extracted addresses) — stream through
-    the staged-general composite-key correlator and reproduce the batch
-    general path exactly, state carried across micro-batches."""
+    the composite state key and reproduce the batch engine exactly,
+    state carried across micro-batches."""
     rs = compile_ruleset_from_dir(
         os.path.join(os.path.dirname(__file__), "..", "rules-entry",
                      "ipkeys"))
@@ -158,11 +158,10 @@ def test_stream_ipkeys_equal_batch(spark, tmp_path):
 
 
 def test_stream_dual_track_equal_batch(spark, tmp_path):
-    """after + threshold with DIFFERENT tracks on one rule — the batch
-    STAGED-fallback shape (two keyed stages) — streams through a per-sid
-    "d"-composite state group (both stores are sid-scoped) and must
-    reproduce the batch result exactly, with both suppression kinds
-    actually flipping."""
+    """after + threshold with DIFFERENT tracks on one rule — two state
+    keys per row — streams through the per-sid "d"-composite state group
+    (both stores are sid-scoped) and must reproduce the batch result
+    exactly, with both suppression kinds actually flipping."""
     from sagan_spark.rules.compiler import compile_ruleset
     rs = compile_ruleset(
         'alert syslog any any -> any any (msg:"dual"; '
@@ -170,8 +169,8 @@ def test_stream_dual_track_equal_batch(spark, tmp_path):
         "after: track by_src, count 2, seconds 604800; "
         "threshold: type limit, track by_dst, count 2, seconds 604800; "
         "classtype:misc-attack; sid:9; rev:1;)")
-    from sagan_spark.correlate import single_key_per_row
-    assert not single_key_per_row(rs)   # batch takes the staged fallback
+    from sagan_spark.correlate import dual_track_rules
+    assert dual_track_rules(rs)   # the rule takes the per-sid "d" key
     rows = gen_rows(12)
     # a 3-address src pool recurring across convs: the after store (by
     # extracted src) and the threshold store (by conv-fallback dst) both
@@ -256,8 +255,8 @@ def test_late_rows_accumulator(spark, tmp_path):
 
 def test_stream_none_flexbit_equal_batch(spark, tmp_path):
     """'none'-direction flexbits (cross-conv state, flexbit-mmap.c:124)
-    route through the single global state group instead of raising, and
-    reproduce the batch general-path fold exactly."""
+    take the composite flexbit name-group key instead of raising, and
+    reproduce the batch fold exactly."""
     from sagan_spark.rules.compiler import compile_ruleset
     rs = compile_ruleset("\n".join([
         'alert syslog any any -> any any (msg:"s"; content:"stage1"; '
@@ -378,16 +377,44 @@ def test_stream_plan_is_one_stateful_operator(spark, tmp_path):
         plan = q._jsq.streamingQuery().lastExecution().executedPlan()
     finally:
         q.stop()
+    names = _plan_node_names(plan)
+    assert names.count("FlatMapGroupsInPandasWithStateExec") == 1
+    assert names.count("MapInPandasExec") == 1
+    assert not [n for n in names if "Union" in n]
+
+
+def test_batch_plan_is_one_fold(spark, tmp_path):
+    """The batch twin: run_correlate on every key kind ("x", "f", "a",
+    per-sid "d") executes one scan, the matcher, and ONE fold — no Union
+    re-running scan + match for stateless rows, no persisted stage."""
+    rs = _ipkeys_dual_ruleset(tmp_path)
+    in_dir = str(tmp_path / "batch_plan")
+    spark.createDataFrame(pd.DataFrame(gen_rows(8))).write.parquet(in_dir)
+    corr = run_correlate(
+        run_match(parse_transcripts(spark.read.parquet(in_dir)), rs), rs)
+    corr.collect()
+    names = _plan_node_names(corr._jdf.queryExecution().executedPlan())
+    assert names.count("MapInPandasExec") == 2   # matcher + fold
+    assert names.count("FileSourceScanExec") == 1
+    assert not [n for n in names if "Union" in n or "InMemory" in n]
+
+
+def _plan_node_names(plan) -> list[str]:
+    """Class names of every node of an executed plan, descending into
+    adaptive (AQE) plans and their query stages."""
     names = []
     stack = [plan]
     while stack:
         node = stack.pop()
-        names.append(node.getClass().getSimpleName())
+        name = node.getClass().getSimpleName()
+        names.append(name)
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
         children = node.children()
         stack.extend(children.apply(i) for i in range(children.size()))
-    assert names.count("FlatMapGroupsInPandasWithStateExec") == 1
-    assert names.count("MapInPandasExec") == 1
-    assert not [n for n in names if "Union" in n]
+    return names
 
 
 class _FakeGroupState:
@@ -470,3 +497,21 @@ def test_bucket_state_stays_bounded(evict):
         assert entries[-1] == entries[10]
     else:
         assert entries[-1] == batches * per_batch * per_conv
+
+
+def test_state_from_another_key_scheme_raises():
+    """A blob written before the state-key scheme was versioned (or under
+    another version) may hold keys that now hash to other buckets; the
+    bucket correlator must refuse it instead of folding on from it."""
+    from sagan_spark.rules.compiler import compile_ruleset
+    from sagan_spark.streaming import _bucket_correlator
+    rs = compile_ruleset(
+        'alert syslog any any -> any any (msg:"a"; content:"foo"; '
+        "after: track by_src, count 1, seconds 60; sid:1;)")
+    fn = _bucket_correlator(rs, 1)
+    for version in ({}, {"v": -1}):
+        state = _FakeGroupState()
+        state.blob = json.dumps({"a": [], "t": [], "x": [], "f": [],
+                                 "s": [], "m": 0, "n": 1, **version})
+        with pytest.raises(RuntimeError, match="fresh checkpoint"):
+            list(fn((0,), iter([]), state))

@@ -54,27 +54,14 @@ def main() -> int:
         enrich_alerts(alert_sink(corr, rs), spark, rs), spark, rs),
         spark, rs)
 
-    # the GENERAL correlate path: IP-extracted keys now take the
-    # composite-key plan — ONE Exchange hashpartitioning(_gkey), a sort,
-    # one mapInPandas unified fold, then a union with the stateless
-    # pass-through; NOT the staged per-clause chain and never a
+    # IP-extracted keys take the same plan over the composite state key
+    # — ONE Exchange, a sort, one mapInPandas unified fold; never a
     # SinglePartition exchange (the round-2 serial scale-killer)
-    from sagan_spark.correlate import conv_keyed_only, single_key_per_row
+    from sagan_spark.correlate import conv_keyed_only
     rs_ip = compile_ruleset_from_dir(
         os.path.join(REPO, "rules-entry", "ipkeys"))
-    assert not conv_keyed_only(rs_ip) and single_key_per_row(rs_ip)
+    assert not conv_keyed_only(rs_ip)
     corr_ip = run_correlate(run_match(parsed, rs_ip), rs_ip)
-
-    # the staged FALLBACK (after+threshold with different tracks on one
-    # rule): per-clause keyed folds, NULL keys salted — kept auditable
-    from sagan_spark.rules.compiler import compile_ruleset
-    rs_stg = compile_ruleset(
-        'alert syslog any any -> any any (msg:"stg"; content:"connection '
-        'from"; parse_src_ip: 1; after: track by_src, count 2, seconds '
-        "600; threshold: type limit, track by_dst, count 2, seconds 600; "
-        "classtype:not-suspicious; sid:6500001; rev:1;)")
-    assert not single_key_per_row(rs_stg)
-    corr_stg = run_correlate(run_match(parsed, rs_stg), rs_stg)
 
     from sagan_spark.functions.dedup import minhash_lsh_pairs
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -91,22 +78,20 @@ def main() -> int:
          "Contains-chain sits directly above the scan)", grab(kept)),
         ("Match stage (JVM candidate prefilter → column-pruned projection "
          "→ mapInPandas matcher)", grab(matches)),
-        ("Correlate fast path (ONE Exchange hashpartitioning(conv_id, "
-         "state-group salt) → sort → mapInPandas engine-order fold)",
-         grab(corr)),
-        ("Correlate GENERAL path, IP-extracted keys (composite-key plan: "
-         "ONE Exchange hashpartitioning(_gkey) → sort → unified fold → "
-         "union with stateless pass-through — no SinglePartition "
-         "exchange, no per-clause shuffle chain)", grab(corr_ip)),
-        ("Correlate staged FALLBACK (after+threshold, different tracks: "
-         "one keyed fold per clause, NULL keys salted by (conv_id, sid))",
-         grab(corr_stg)),
+        ("Correlate, conv-derived keys (ONE Exchange "
+         "hashpartitioning(_skey = conv_id + state-group salt) → sort → "
+         "mapInPandas engine-order fold)", grab(corr)),
+        ("Correlate, IP-extracted keys (the same plan over the composite "
+         "state key: ONE Exchange hashpartitioning(_skey) → sort → one "
+         "unified fold; stateless rows ride along with default flags — "
+         "no Union, no persist, no SinglePartition exchange)",
+         grab(corr_ip)),
         ("Alert sink with classification + reference + gen-msg enrich "
          "(three BroadcastHashJoins — no shuffle of the fact side)",
          grab(alerts)),
-        ("MinHash+LSH near-dup pairs (banded equi-join candidates + "
-         "exact-Jaccard verify — shuffles carry signatures/shingles, "
-         "never an all-pairs product)", grab(lsh)),
+        ("MinHash+LSH near-dup pairs (exact-duplicate collapse → banded "
+         "equi-join candidates over representatives → exact-Jaccard "
+         "verify → cluster re-expansion)", grab(lsh)),
         ("Column-pruning / pushdown probe on a raw parquet scan "
          "(ReadSchema 2 columns, PushedFilters on lang)", grab(pruned)),
     ]
